@@ -332,6 +332,14 @@ def _slowest(
     return {n: timings[n] for n in names}
 
 
+def _cpus_field(raw: str) -> int | str:
+    """The contract's ``cpus`` echo of $SPARK_GRAFT_CPUS: the int when
+    it is numeric, the raw string otherwise (``local[*]`` takes "*"),
+    so an unusual value is reported instead of raising after every
+    measurement has finished."""
+    return int(raw) if raw.strip().isdigit() else raw
+
+
 def _spread(totals: list[float]) -> float:
     """Relative spread (max-min)/median of the warm pass totals; 0.0
     when fewer than two passes. True even-length median — with the
@@ -570,7 +578,7 @@ def main() -> None:
         # suspect_cpus_ignored heuristic fired on the floor-bound core
         # subset.  Echo both the requested core count and the
         # scheduler's actual parallelism so the artifact self-certifies.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": _cpus_field(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "n_runs": n_runs,
         # r5 lesson: probes/sims running concurrently inflated

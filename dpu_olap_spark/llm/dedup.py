@@ -470,8 +470,12 @@ def _propagate_min_labels(
     exchange elision depends on.
 
     RAISES past max_rounds rather than returning partial clusters —
-    this plain (non-doubling) propagation needs `diameter` rounds, so
-    max_rounds IS the deepest duplicate chain supported.
+    this plain (non-doubling) propagation needs `diameter` rounds to
+    drive every label to its minimum plus one more to observe the
+    fixpoint, and never fewer than 2 (an edgeless graph pays one no-op
+    round and the observing one).  So the smallest max_rounds that
+    converges is the longest duplicate chain (in edges) + 1, and at
+    least 2.
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
@@ -519,8 +523,10 @@ def _propagate_min_labels(
         labels.unpersist()
         raise RuntimeError(
             "dedup_clusters: label propagation did not converge within the "
-            f"iteration bound ({max_rounds}) — raise SPARK_GRAFT_CC_MAX_ROUNDS "
-            "for deeper duplicate chains rather than returning partial clusters"
+            f"iteration bound ({max_rounds}); a duplicate chain of d edges "
+            "needs d + 1 rounds and any graph at least 2 — raise "
+            "SPARK_GRAFT_CC_MAX_ROUNDS for deeper duplicate chains rather "
+            "than returning partial clusters"
         )
     return labels, i + 1
 

@@ -111,21 +111,19 @@ def run_stream_to_sink(
     memory sink is not recoverable by design); pass ``path`` to write
     a parquet sink instead, which IS checkpoint-recoverable and what
     the resume-semantics test uses."""
-    from dpu_olap_spark.sources.tables import register_python_sources_once
+    from dpu_olap_spark.sources.tables import (
+        register_python_sources_once,
+        run_available_now,
+    )
 
     register_python_sources_once(spark)
-    sdf = spark.readStream.format("synth_stream").load()
-    writer = sdf.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint
-    ).trigger(availableNow=True)
-    if path is None:
-        q = writer.format("memory").queryName(sink).start()
-    else:
-        q = writer.format("parquet").option("path", path).start()
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError(f"synth_stream run {sink!r} did not finish in 180s")
+    run_available_now(
+        spark.readStream.format("synth_stream").load(),
+        sink if path is None else None,
+        "append",
+        path=path,
+        checkpoint=checkpoint,
+    )
 
 
 @query(

@@ -9,8 +9,11 @@ pushdown actually reaches the scan (tests/test_plans.py).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import tempfile
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -157,29 +160,27 @@ def replay_state_partitions(n_rows: int, cores: int) -> int:
     )
 
 
-def join_replay_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Volume-adaptive state partitions for the registered
-    stream-stream join queries: events row count from the parquet
-    footer, cores from the local scheduler."""
-    n = parquet_row_count(os.path.join(sf_dir, "events.parquet"))
-    return replay_state_partitions(n, spark.sparkContext.defaultParallelism)
-
-
 def events_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Volume-adaptive state partitions for the JVM-side stateful
-    streams over the events table (aggregations, dedup, session
-    windows, time-travel) — the same rows/300k volume rule as the
-    join streams.  r18 optimization-round measurement (identical
-    output rows at every setting): a JVM agg stream over sf0.1's 200k
-    events ran 0.63s at p8 vs 0.53s at p4; the doubled-stream dedup
-    (200k state keys) 0.93s at p8 vs 0.79s at p4 — the fixed
-    per-partition store-commit cost dominates under ~1.2M rows, so
-    the floor of 4 wins; above it the volume term takes over exactly
-    as for the joins.  Python-stateful streams
-    (applyInPandasWithState) deliberately KEEP state_partitions=8:
-    their sweep showed p2 regressing 3.1s -> 5.0s because
-    pandas-worker parallelism, not commit cost, dominates there."""
-    return join_replay_partitions(spark, sf_dir)
+    streams over the events table — the stream-stream joins,
+    aggregations, dedup, session windows and time-travel: events row
+    count from the parquet footer, cores from the local scheduler,
+    through the rows/300k volume rule of replay_state_partitions.
+
+    Measured for the joins: see replay_state_partitions (SCALE.md
+    §r16 for the volume term, the r18 knee of 4 for the floor).
+    Measured for the rest, r18 optimization round (identical output
+    rows at every setting): a JVM agg stream over sf0.1's 200k events
+    ran 0.63s at p8 vs 0.53s at p4; the doubled-stream dedup (200k
+    state keys) 0.93s at p8 vs 0.79s at p4 — the fixed per-partition
+    store-commit cost dominates under ~1.2M rows, so the floor of 4
+    wins; above it the volume term takes over exactly as for the
+    joins.  Python-stateful streams (applyInPandasWithState)
+    deliberately KEEP state_partitions=8: their sweep showed p2
+    regressing 3.1s -> 5.0s because pandas-worker parallelism, not
+    commit cost, dominates there."""
+    n = parquet_row_count(os.path.join(sf_dir, "events.parquet"))
+    return replay_state_partitions(n, spark.sparkContext.defaultParallelism)
 
 
 def _restore_nano_ts(df: DataFrame, name: str) -> DataFrame:
@@ -284,44 +285,72 @@ def register_python_sources_once(spark: SparkSession) -> None:
         _PY_SRC_REGISTERED[spark] = True
 
 
-def run_to_memory_sink(
-    stream_df,
-    sink_name: str,
+def run_available_now(
+    stream_df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None] | None,
     output_mode: str,
+    *,
+    path: str | None = None,
+    checkpoint: str | None = None,
     timeout_s: int = 180,
     state_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
-):
-    """Run a finite (availableNow) stream into a memory sink and FAIL
-    LOUDLY if it does not complete in time — a timed-out stream would
-    otherwise silently return partial aggregates. The previous sink
-    table of the same query family (name minus trailing counter) is
-    dropped so repeated builds don't accumulate result copies on the
-    driver.
+) -> None:
+    """The one way to run a finite (availableNow) stream: start it,
+    wait for it, stop it, and FAIL LOUDLY if it did not finish within
+    ``timeout_s`` — a timed-out stream would otherwise silently leave
+    partial aggregates or a partial sink directory. The query is
+    stopped on every exit path, so no run outlives this call.
+
+    ``sink`` picks where the rows go:
+      * a ``str`` — a memory sink queryable as that table name; the
+        previous table of the same query family (name minus trailing
+        counter) is dropped so repeated builds don't accumulate result
+        copies on the driver;
+      * a callable ``(batch_df, batch_id)`` — a foreachBatch sink;
+      * ``None`` — a parquet file sink at ``path`` if one is given,
+        else the noop sink (state readers need only the checkpoint).
+
+    ``checkpoint`` is the caller's to keep (state readers read it
+    after the run, recovery tests resume from it); when omitted a
+    temporary checkpoint lives exactly as long as the run.
 
     ``state_partitions`` sizes the stateful operator's state store: a
     streaming query pins spark.sql.shuffle.partitions at FIRST start
     for the checkpoint's lifetime, and every micro-batch pays a
     per-partition state-store commit, so the right number tracks the
     active key cardinality, not the batch-shuffle default (measured at
-    sf0.1: 150 user keys, 32 partitions -> 7.9 s, 8 -> 2.9 s). The
-    conf is restored after the run; a concurrently *planned* batch
-    query would at worst coalesce through AQE, not break.
+    sf0.1: 150 user keys, 32 partitions -> 7.9 s, 8 -> 2.9 s). It and
+    ``extra_confs`` are restored after the start; a concurrently
+    *planned* batch query would at worst coalesce through AQE, not
+    break.
     """
-    import tempfile
-
-    family = sink_name.rstrip("0123456789")
-    prev = _LIVE_SINKS.get(family)
-    if prev is not None:
-        try:
-            stream_df.sparkSession.catalog.dropTempView(prev)
-        except Exception:
-            pass
-    _LIVE_SINKS[family] = sink_name
-
     spark = stream_df.sparkSession
-    with tempfile.TemporaryDirectory(prefix=f"ckpt_{sink_name}_") as ckpt:
-        # The conf matters only while the streaming query PLANS (state
+    writer = stream_df.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    if isinstance(sink, str):
+        family = sink.rstrip("0123456789")
+        prev = _LIVE_SINKS.get(family)
+        if prev is not None:
+            try:
+                spark.catalog.dropTempView(prev)
+            except Exception:
+                pass
+        _LIVE_SINKS[family] = sink
+        writer, target = writer.format("memory").queryName(sink), sink
+    elif sink is not None:
+        writer, target = writer.foreachBatch(sink), "foreachBatch"
+    elif path is not None:
+        writer, target = writer.format("parquet").option("path", path), path
+    else:
+        writer, target = writer.format("noop"), "noop"
+
+    owned = (
+        tempfile.TemporaryDirectory(prefix="ckpt_available_now_")
+        if checkpoint is None
+        else contextlib.nullcontext(checkpoint)
+    )
+    with owned as ckpt:
+        # The confs matter only while the streaming query PLANS (state
         # partitioning is pinned at first start); set->start->restore
         # under a lock so concurrent callers (bench's thread-pool phase)
         # never plan against another stream's value or restore a stale
@@ -330,30 +359,24 @@ def run_to_memory_sink(
             to_set: dict[str, str] = dict(extra_confs or {})
             if state_partitions is not None:
                 to_set["spark.sql.shuffle.partitions"] = str(state_partitions)
-            prev_vals = {
-                k: spark.conf.get(k, None) for k in to_set
-            }
+            prev_vals = {k: spark.conf.get(k, None) for k in to_set}
             for k, v in to_set.items():
                 spark.conf.set(k, v)
             try:
-                q = (
-                    stream_df.writeStream.outputMode(output_mode)
-                    .format("memory")
-                    .queryName(sink_name)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
+                q = writer.option("checkpointLocation", ckpt).start()
             finally:
-                for k, prev in prev_vals.items():
-                    if prev is None:
+                for k, v in prev_vals.items():
+                    if v is None:
                         spark.conf.unset(k)
                     else:
-                        spark.conf.set(k, prev)
-        finished = q.awaitTermination(timeout_s)
-        q.stop()
+                        spark.conf.set(k, v)
+        try:
+            # a non-positive budget never counts as finished
+            finished = timeout_s > 0 and q.awaitTermination(timeout_s)
+        finally:
+            q.stop()
         if not finished:
             raise RuntimeError(
-                f"stream {sink_name!r} did not finish within {timeout_s}s; "
-                "refusing to return partial results"
+                f"stream to {target!r} (checkpoint {ckpt}) did not finish "
+                f"within {timeout_s}s; refusing to return partial results"
             )

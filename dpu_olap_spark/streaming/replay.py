@@ -19,7 +19,7 @@ identical emitted rows in every config):
 This module makes lever 2 a code path, not a runbook note:
 ``replay_interval_join`` drives the SAME pipeline builder the
 registered queries use (`windows.interval_join_pipeline`) and the
-same sink runner (`tables.run_to_memory_sink`), choosing chunk count
+same sink runner (`tables.run_available_now`), choosing chunk count
 and state partitions from the measured rules.  The levers do NOT
 stack (per-batch commit cost scales with partitions x batches), so
 the chunked path halves the partition count and caps it at the
@@ -44,7 +44,7 @@ from dpu_olap_spark.sources.tables import (
     _restore_nano_ts,
     parquet_row_count,
     replay_state_partitions,
-    run_to_memory_sink,
+    run_available_now,
 )
 
 ROWS_PER_CHUNK = 1_000_000
@@ -338,7 +338,7 @@ def replay_interval_join(
         spark, sf_dir, how=how, watermark=watermark, source=source
     )
     sink = f"replay_ij_{how.lower()}_{next(_replay_counter)}"
-    run_to_memory_sink(
+    run_available_now(
         joined, sink, "append",
         timeout_s=timeout_s, state_partitions=partitions,
     )

@@ -28,6 +28,7 @@ interleaving. Arrow batches keep the Python hop amortized.
 from __future__ import annotations
 
 import itertools
+import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -42,10 +43,21 @@ from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     events_state_partitions,
     load_events_stream,
-    run_to_memory_sink,
+    run_available_now,
 )
 
 _sink_counter = itertools.count()
+
+# Keyed state on the RocksDB provider with changelog checkpointing —
+# the two confs a deployment flips (the changelog is also what makes
+# the state change feed readable); set per run and restored after.
+_ROCKSDB_CHANGELOG_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+        "true",
+}
 
 # A key idle for this much EVENT time (watermark domain) is evicted.
 # 30 min matches the session gap used by session_window.
@@ -431,7 +443,7 @@ def q_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "RocksDBStateStoreProvider"
         }
     sink = f"stateful_profile_{next(_sink_counter)}"
-    run_to_memory_sink(out, sink, "update", state_partitions=8, extra_confs=extra)
+    run_available_now(out, sink, "update", state_partitions=8, extra_confs=extra)
     return finalize_user_profile(spark.table(sink))
 
 
@@ -455,8 +467,8 @@ def q_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = user_running_stats(stream)
     sink = f"stateful_user_stats_{next(_sink_counter)}"
     # state partitions sized to the ~150-user active key set (see
-    # run_to_memory_sink docstring; 4x fewer state-store commits/batch)
-    run_to_memory_sink(out, sink, "update", state_partitions=8)
+    # run_available_now docstring; 4x fewer state-store commits/batch)
+    run_available_now(out, sink, "update", state_partitions=8)
     return finalize_user_stats(spark.table(sink))
 
 
@@ -511,40 +523,17 @@ def q_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit state size per partition, or bulk-fix corrupt state without
     replaying the stream (pair with the state-metadata source, which
     tests/test_streaming.py asserts lists this operator). The
-    checkpoint persists for the read (unlike run_to_memory_sink's
-    auto-removed tempdir); one per process, replaced on rebuild."""
-    import tempfile
-
+    checkpoint is caller-owned so it persists for the read (not
+    run_available_now's auto-removed tempdir); one per process,
+    replaced on rebuild."""
     stream = load_events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     ckpt = tempfile.mkdtemp(prefix="ss_read_ckpt_")
     sink = f"statestore_read_{next(_sink_counter)}"
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(events_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_read stream did not finish in 180s")
+    run_available_now(
+        agg, sink, "update", checkpoint=ckpt,
+        state_partitions=events_state_partitions(spark, sf_dir),
+    )
     _swap_ckpt("ckpt", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
@@ -609,8 +598,6 @@ def q_statestore_session_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is hardest to reason about from the outside. State shards by
     the stream's key partitioning (8 here, pinned like statestore_read
     so the reader sees a stable layout)."""
-    import tempfile
-
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "3650 days")
@@ -618,31 +605,10 @@ def q_statestore_session_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     ckpt = tempfile.mkdtemp(prefix="ss_sess_ckpt_")
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(events_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_session_read stream did not finish in 180s")
+    run_available_now(
+        agg, None, "append", checkpoint=ckpt,
+        state_partitions=events_state_partitions(spark, sf_dir),
+    )
     _swap_ckpt("sess_ckpt", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
@@ -698,8 +664,6 @@ def q_joinstate_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     least observable stateful operator (two stores per side); this
     reads it as a DataFrame to audit per-key growth, find the entity
     whose clicks never evict, or right-size watermark delays."""
-    import tempfile
-
     from dpu_olap_spark.streaming.windows import interval_join_pipeline
 
     # The shared pipeline's output projection only shapes the noop
@@ -708,32 +672,10 @@ def q_joinstate_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical to the pre-refactor inline construction.
     joined = interval_join_pipeline(spark, sf_dir, how="inner")
     ckpt = tempfile.mkdtemp(prefix="joinstate_ckpt_")
-    from dpu_olap_spark.sources.tables import (
-        _STATE_CONF_LOCK,
-        join_replay_partitions,
+    run_available_now(
+        joined, None, "append", checkpoint=ckpt,
+        state_partitions=events_state_partitions(spark, sf_dir),
     )
-
-    state_parts = join_replay_partitions(spark, sf_dir)
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-        try:
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("joinstate_read stream did not finish in 180s")
     _swap_ckpt("join_ckpt", ckpt)
     left = (
         spark.read.format("statestore")
@@ -788,18 +730,12 @@ def q_rocksdb_state_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("bigint")).alias("cents"),
     )
     sink = f"rocksdb_state_agg_{next(_sink_counter)}"
-    run_to_memory_sink(
+    run_available_now(
         agg,
         sink,
         "update",
         state_partitions=events_state_partitions(spark, sf_dir),
-        extra_confs={
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
-                "true",
-        },
+        extra_confs=_ROCKSDB_CHANGELOG_CONFS,
     )
     # update-mode sinks may hold multiple snapshots per key (one per
     # micro-batch that touched it); keep the LAST snapshot per key —
@@ -840,44 +776,14 @@ def q_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-batch change counts would be split-dependent; final state is
     not). update-mode aggregation never deletes, so the last change
     per key is its final value."""
-    import tempfile
-
     stream = load_events_stream(spark, sf_dir)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     ckpt = tempfile.mkdtemp(prefix="ss_cf_ckpt_")
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        to_set = {
-            "spark.sql.shuffle.partitions":
-                str(events_state_partitions(spark, sf_dir)),
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled": "true",
-        }
-        prev_vals = {k: spark.conf.get(k, None) for k in to_set}
-        for k, v in to_set.items():
-            spark.conf.set(k, v)
-        try:
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            for k, v in prev_vals.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_changefeed stream did not finish in 180s")
+    run_available_now(
+        agg, None, "update", checkpoint=ckpt,
+        state_partitions=events_state_partitions(spark, sf_dir),
+        extra_confs=_ROCKSDB_CHANGELOG_CONFS,
+    )
     _swap_ckpt("cf_ckpt", ckpt)
     feed = (
         spark.read.format("statestore")
@@ -941,7 +847,6 @@ def q_statestore_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow the scan to one partition's snapshot lineage for targeted
     repair)."""
     import os
-    import tempfile
     import time as _time
 
     from dpu_olap_spark.sources.tables import load_table
@@ -991,31 +896,10 @@ def q_statestore_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     ckpt = tempfile.mkdtemp(prefix="tt_ckpt_")
     _TT_DIRS.append(ckpt)
-    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
-
-    with _STATE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(events_state_partitions(spark, sf_dir)),
-        )
-        try:
-            q = (
-                agg.writeStream.outputMode("update")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    finished = q.awaitTermination(180)
-    q.stop()
-    if not finished:
-        raise RuntimeError("statestore_timetravel stream did not finish in 180s")
+    run_available_now(
+        agg, None, "update", checkpoint=ckpt,
+        state_partitions=events_state_partitions(spark, sf_dir),
+    )
     state = (
         spark.read.format("statestore").option("batchId", "1").load(ckpt)
     )
@@ -1202,6 +1086,6 @@ def q_stream_histogram_pctl(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_bucket_counts(stream)
     sink = f"stream_histogram_pctl_{next(_sink_counter)}"
     # ~125 active (group, bucket) cells: 8 state partitions (see
-    # run_to_memory_sink's sizing note)
-    run_to_memory_sink(out, sink, "update", state_partitions=8)
+    # run_available_now's sizing note)
+    run_available_now(out, sink, "update", state_partitions=8)
     return finalize_histogram_percentiles(spark.table(sink))

@@ -24,10 +24,9 @@ from pyspark.sql import functions as F
 from dpu_olap_spark.registry import query
 from dpu_olap_spark.sources.tables import (
     events_state_partitions,
-    join_replay_partitions,
     load_events_stream,
     load_table,
-    run_to_memory_sink,
+    run_available_now,
 )
 
 _sink_counter = itertools.count()
@@ -58,9 +57,10 @@ def interval_join_pipeline(
     bookkeeping per source per micro-batch — measured on the 5-batch
     chunked replay at sf0.1: latestOffset 320→170 ms, getBatch
     58→32 ms, queryPlanning ~−10%, identical 39,705 emitted rows and
-    value checksum (tools/replay_shared_source_ab.py).  Each side
-    still scans its own branch; watermarks stay per-branch (Spark's
-    min-watermark policy across the two, unchanged by sharing)."""
+    value checksum (OPTIMIZATION_r19.md, "Shared streaming source").
+    Each side still scans its own branch; watermarks stay per-branch
+    (Spark's min-watermark policy across the two, unchanged by
+    sharing)."""
     shared = source() if source is not None else load_events_stream(spark, sf_dir)
 
     def side(kind: str, id_alias: str, ts_alias: str) -> DataFrame:
@@ -135,8 +135,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
     sink = f"stream_static_join_sink_{next(_sink_counter)}"
-    run_to_memory_sink(agg, sink, "complete",
-                       state_partitions=events_state_partitions(spark, sf_dir))
+    run_available_now(agg, sink, "complete",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return spark.table(sink)
 
 
@@ -158,8 +158,8 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode memory sink) and returned as the final result table."""
     stream = load_events_stream(spark, sf_dir)
     sink = f"stream_tumbling_sink_{next(_sink_counter)}"
-    run_to_memory_sink(tumbling_agg(stream), sink, "complete",
-                       state_partitions=events_state_partitions(spark, sf_dir))
+    run_available_now(tumbling_agg(stream), sink, "complete",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return spark.table(sink)
 
 
@@ -286,8 +286,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch join — the oracle."""
     joined = interval_join_pipeline(spark, sf_dir, how="inner")
     sink = f"stream_ss_join_{next(_sink_counter)}"
-    run_to_memory_sink(joined, sink, "append",
-                       state_partitions=join_replay_partitions(spark, sf_dir))
+    run_available_now(joined, sink, "append",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return spark.table(sink)
 
 
@@ -321,8 +321,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     sink = f"stream_dedup_sink_{next(_sink_counter)}"
-    run_to_memory_sink(deduped, sink, "append",
-                       state_partitions=events_state_partitions(spark, sf_dir))
+    run_available_now(deduped, sink, "append",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -358,8 +358,8 @@ def q_stream_dedup_unbounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = load_events_stream(spark, sf_dir).select("user_id", "event_type")
     deduped = stream.dropDuplicates(["user_id", "event_type"])
     sink = f"stream_dedup_unb_{next(_sink_counter)}"
-    run_to_memory_sink(deduped, sink, "append",
-                       state_partitions=events_state_partitions(spark, sf_dir))
+    run_available_now(deduped, sink, "append",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return (
         spark.table(sink)
         .groupBy("event_type")
@@ -414,8 +414,8 @@ def q_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     by (delay + range) per side, sharded by the join key."""
     joined = interval_join_pipeline(spark, sf_dir, how="leftOuter")
     sink = f"stream_lo_join_{next(_sink_counter)}"
-    run_to_memory_sink(joined, sink, "append",
-                       state_partitions=join_replay_partitions(spark, sf_dir))
+    run_available_now(joined, sink, "append",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return spark.table(sink)
 
 
@@ -491,8 +491,8 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"stream_sess_app_{next(_sink_counter)}"
-    run_to_memory_sink(agg, sink, "append",
-                       state_partitions=events_state_partitions(spark, sf_dir))
+    run_available_now(agg, sink, "append",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return spark.table(sink)
 
 
@@ -539,6 +539,6 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     event time - 1 h)."""
     joined = interval_join_pipeline(spark, sf_dir, how="fullOuter")
     sink = f"stream_fo_join_{next(_sink_counter)}"
-    run_to_memory_sink(joined, sink, "append",
-                       state_partitions=join_replay_partitions(spark, sf_dir))
+    run_available_now(joined, sink, "append",
+                      state_partitions=events_state_partitions(spark, sf_dir))
     return spark.table(sink)

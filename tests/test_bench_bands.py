@@ -122,3 +122,13 @@ def test_slowest_selection_is_deterministic_and_excludes_core():
     assert set(bench._slowest(timings, core, k=99)) == {
         "a_slow", "b_slow", "fast", "mid",
     }
+
+
+def test_cpus_field_keeps_non_numeric_values():
+    """The contract echoes $SPARK_GRAFT_CPUS: numeric values as ints,
+    anything else ("*" for local[*]) as the raw string, never raising
+    after the measurement has finished."""
+    assert bench._cpus_field("8") == 8
+    assert bench._cpus_field("32") == 32
+    assert bench._cpus_field("*") == "*"
+    assert bench._cpus_field("") == ""

@@ -137,7 +137,9 @@ def test_cc_propagation_diameter_bound_boundary(spark):
     drive every label to 0 plus 1 to OBSERVE the checksum fixpoint —
     so max_rounds=5 converges at the bound and max_rounds=4 must RAISE
     (fail-loud, never partial clusters); max_rounds<1 is rejected
-    outright.  Drives _propagate_min_labels directly: forcing a
+    outright.  An EDGELESS graph has diameter 0 but still needs 2
+    rounds (1 no-op propagation + 1 observe): max_rounds=1 raises and
+    2 converges.  Drives _propagate_min_labels directly: forcing a
     5-deep near-dup chain through the LSH pipeline would pin the
     minhash vocabulary, not the loop."""
     from dpu_olap_spark.llm import dedup as dd
@@ -159,6 +161,15 @@ def test_cc_propagation_diameter_bound_boundary(spark):
 
     with pytest.raises(ValueError, match="max_rounds"):
         dd._propagate_min_labels(nodes, dd._cc_edges(pairs), 4, max_rounds=0)
+
+    no_edges = spark.createDataFrame([], "src bigint, dst bigint")
+    with pytest.raises(RuntimeError, match="SPARK_GRAFT_CC_MAX_ROUNDS"):
+        dd._propagate_min_labels(nodes, no_edges, 4, max_rounds=1)
+    labels, rounds = dd._propagate_min_labels(nodes, no_edges, 4, max_rounds=2)
+    got = {r.doc_id: r.cluster_id for r in labels.collect()}
+    labels.unpersist()
+    assert got == {i: i for i in range(5)}
+    assert rounds == 2, "an edgeless graph must take exactly 2 rounds"
 
 
 def test_cc_max_rounds_env_tunable(spark, tmp_path, monkeypatch):

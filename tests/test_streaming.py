@@ -657,10 +657,10 @@ def test_stream_histogram_pctl_state_bounded_and_batch_exact(spark):
 
     sf = "/root/testdata/sf0.01"
     out = st.streaming_bucket_counts(load_events_stream(spark, sf))
-    from dpu_olap_spark.sources.tables import run_to_memory_sink
+    from dpu_olap_spark.sources.tables import run_available_now
 
     sink = f"hist_pctl_test_{next(st._sink_counter)}"
-    run_to_memory_sink(out, sink, "update", state_partitions=8)
+    run_available_now(out, sink, "update", state_partitions=8)
     emitted = spark.table(sink)
 
     W = st.HIST_BUCKET_CENTS_STREAM
@@ -754,10 +754,10 @@ def test_time_ordered_chunked_replay_matches_single_batch(
     def drain(source, label):
         joined = sw.build_fo_join(spark, sf, source=source,
                                   watermark=watermark)
-        from dpu_olap_spark.sources.tables import run_to_memory_sink
+        from dpu_olap_spark.sources.tables import run_available_now
 
         sink = f"chunkeq_{n_chunks}_{watermark.split()[0]}_{label}"
-        run_to_memory_sink(joined, sink, "append", state_partitions=8)
+        run_available_now(joined, sink, "append", state_partitions=8)
         rows = Counter(tuple(r) for r in spark.table(sink).collect())
         spark.catalog.dropTempView(sink)
         return rows
@@ -1007,3 +1007,59 @@ def test_equal_mtime_ties_scramble_replay(spark, tmp_path):
         got = fr._run(spark, sf, "hist_pctl", wm,
                       chunked_events_source(spark, cdir))
         assert got == hb, "histogram op not order-invariant"
+
+
+_RUNNER_CONFS = {
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
+
+
+def _runner_state(spark):
+    keys = ("spark.sql.shuffle.partitions", *_RUNNER_CONFS)
+    return (
+        {k: spark.conf.get(k, None) for k in keys},
+        {q.id for q in spark.streams.active},
+    )
+
+
+def _assert_lock_free():
+    from dpu_olap_spark.sources.tables import _STATE_CONF_LOCK
+
+    assert _STATE_CONF_LOCK.acquire(blocking=False), "conf lock still held"
+    _STATE_CONF_LOCK.release()
+
+
+def test_run_available_now_timeout_fails_loudly_and_cleans_up(spark):
+    """The finite-stream runner's failure contract: a run that does not
+    finish inside its budget (timeout_s=0 never counts as finished)
+    RAISES instead of returning partial results, leaves no active
+    stream behind, and restores every conf it set."""
+    from dpu_olap_spark.sources.tables import run_available_now
+
+    before = _runner_state(spark)
+    agg = _stream_events(spark, SF).groupBy("event_type").count()
+    with pytest.raises(RuntimeError, match="did not finish"):
+        run_available_now(
+            agg, "runner_timeout_test", "complete", timeout_s=0,
+            state_partitions=3, extra_confs=_RUNNER_CONFS,
+        )
+    assert _runner_state(spark) == before
+    _assert_lock_free()
+
+
+def test_run_available_now_failed_start_restores_confs(spark):
+    """A start() that the analyzer rejects (complete mode without a
+    streaming aggregation) propagates its error, restores the confs
+    and releases the conf lock, so the next stream plans normally."""
+    from pyspark.errors import AnalysisException
+
+    from dpu_olap_spark.sources.tables import run_available_now
+
+    before = _runner_state(spark)
+    with pytest.raises(AnalysisException):
+        run_available_now(
+            _stream_events(spark, SF), None, "complete",
+            state_partitions=3, extra_confs=_RUNNER_CONFS,
+        )
+    assert _runner_state(spark) == before
+    _assert_lock_free()

@@ -146,12 +146,12 @@ _counter = [0]
 
 
 def _run(spark, sf_dir: str, name: str, watermark: str, source) -> Counter:
-    from dpu_olap_spark.sources.tables import run_to_memory_sink
+    from dpu_olap_spark.sources.tables import run_available_now
 
     df, mode = _build_pipeline(spark, sf_dir, name, watermark, source)
     _counter[0] += 1
     sink = f"fr_{name}_{_counter[0]}"
-    run_to_memory_sink(df, sink, mode, state_partitions=8)
+    run_available_now(df, sink, mode, state_partitions=8)
     rows = _finalize(spark, name, sink)
     spark.catalog.dropTempView(sink)
     return rows

@@ -1256,9 +1256,9 @@ def probe_stream_state(
 
     hist_out = _st.streaming_bucket_counts(load_events_stream(spark, sf_dir))
     hist_sink = f"probe_hist_{next(_st._sink_counter)}"
-    from dpu_olap_spark.sources.tables import run_to_memory_sink
+    from dpu_olap_spark.sources.tables import run_available_now
 
-    run_to_memory_sink(hist_out, hist_sink, "update", state_partitions=8)
+    run_available_now(hist_out, hist_sink, "update", state_partitions=8)
     extra["hist_state_cells"] = (
         spark.table(hist_sink).select("event_type", "b").distinct().count()
     )
